@@ -134,8 +134,9 @@ def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloo
     path the module docstring's sharding design implies — at 10^10 URLs
     the filter is ~12 GB total, far past broadcast range, but any one
     shard is a few MB. Cost is one shuffle of (url_hash + carry columns)
-    keyed by shard; the broadcast path stays the default at small filter
-    sizes. → candidates + `_maybe` boolean."""
+    keyed by shard; the crawler keeps the broadcast probe (probe_hashes)
+    while the filter fits under spark.sql.autoBroadcastJoinThreshold.
+    → candidates + `_maybe` boolean."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -236,11 +237,9 @@ def delete_filter_join(expired_df, bloom_df, n_shards: int):
     the task deletes the fingerprints locally, untouched shards
     (right-only groups) pass through unchanged.  → new (shard, bits).
 
-    This is the retention-path sibling of extend_filter_join — at the
+    This is the retention-path sibling of extend_filter_join: at the
     10^10-URL design point the shard map is the largest state object in
-    the system, and the former broadcast-the-whole-map deletion was the
-    one remaining driver/SPOF route for filter bytes (VERDICT r6
-    What's-wrong #1)."""
+    the system, so it never passes through the driver."""
     import pandas as pd
     from pyspark.sql import functions as F
 

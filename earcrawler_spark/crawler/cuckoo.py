@@ -12,8 +12,9 @@ deterministic victim choice (slot = kick counter mod 4), so shard bytes
 are a pure function of the insertion sequence — required for the
 engine's reproducible checkpoints.
 
-Same executor contract as BloomShard: build/extend per shard inside
-applyInPandas, probe via broadcast bytes; exactness is always backstopped
+Same executor contract as BloomShard: build/extend/delete per shard in
+a cogroup (bloom.extend_filter_join / delete_filter_join), probe via
+broadcast bytes or the shard-local join; exactness is always backstopped
 by the seen-table anti-join (false positives cost a join row, false
 negatives cannot happen for present keys).
 """

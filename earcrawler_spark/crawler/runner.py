@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
+import shutil
 import time
 from dataclasses import dataclass
 
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
 from earcrawler_spark.crawler.bloom import (
-    BloomShard,
+    delete_filter_join,
     extend_filter_join,
     probe_hashes,
     probe_maybe_seen_join,
@@ -64,6 +64,9 @@ from earcrawler_spark.crawler.canonicalize import (
 from earcrawler_spark.crawler.fetch import fetch_and_parse, synthetic_fetch_one
 from earcrawler_spark.crawler.robots import allowed_filter, fetch_robots
 from earcrawler_spark.crawler.state import CrawlState
+
+FILTER_SCHEMA = "shard int, bits binary"
+
 
 def visit_order_cols():
     return [F.col("iter"), F.col("priority").desc(), F.col("host"), F.col("seq")]
@@ -103,26 +106,16 @@ class CrawlConfig:
     # renames per wave, which dominates wall time. On a cluster with a real
     # object store you'd raise this to the write parallelism you want.
     write_partitions: int = 8
-    # seen-filter probe path: 'broadcast' ships all shards to every
-    # executor (fastest while the filter is MBs); 'join' cogroups
-    # candidates with their shard's bits — shard-local, no whole-filter
-    # broadcast, the 10^10-URL scale path. Outputs are identical
-    # (chain-hash-asserted). 'auto' (default) picks 'join' as soon as
-    # the estimated filter size passes probe_broadcast_max_bytes, so
-    # the 10^10 design point never depends on a hand-set flag.
-    probe_mode: str = "auto"
-    probe_broadcast_max_bytes: int = 64 * 1024 * 1024
-    # filter lifecycle I/O: 'driver' round-trips shard bytes through a
-    # driver dict (fine while the filter is MBs); 'distributed' keeps the
-    # (shard, bits) table executor-side END TO END — build/merge via
-    # extend_filter_join, cuckoo retention via delete_filter_join, bloom
-    # retention rebuild via extend_filter_join over the surviving rows —
-    # so no full-filter collect or broadcast ever happens (the 10^10-URL
-    # path where the shard map would OOM the driver). 'auto' (default)
-    # follows resolved_probe_mode: past the broadcast threshold both the
-    # probe AND the lifecycle go shard-local together.
-    filter_io: str = "auto"
 
+    # The seen filter has one lifecycle: build, extend and (cuckoo)
+    # delete all run shard-locally — bloom.extend_filter_join /
+    # delete_filter_join cogroup each shard's rows with that shard's
+    # (shard, bits) row, so filter bytes never round-trip the driver.
+    # Only the probe has two paths (Crawler.probe_path): while this
+    # estimate fits under the session's spark.sql.autoBroadcastJoinThreshold
+    # every executor gets the whole filter by broadcast (fastest at MBs);
+    # past it, candidates cogroup with their own shard — the 10^10-URL
+    # path. Both give identical outputs (chain-hash-asserted).
     def estimated_filter_bytes(self) -> int:
         if self.seen_filter == "cuckoo":
             # n_buckets ~= cap/(4*0.8), 4 uint16 slots per bucket
@@ -130,17 +123,6 @@ class CrawlConfig:
         else:
             per_shard = self.bloom_bits_per_shard // 8
         return self.n_shards * per_shard
-
-    def resolved_probe_mode(self) -> str:
-        if self.probe_mode != "auto":
-            return self.probe_mode
-        big = self.estimated_filter_bytes() > self.probe_broadcast_max_bytes
-        return "join" if big else "broadcast"
-
-    def resolved_filter_io(self) -> str:
-        if self.filter_io != "auto":
-            return self.filter_io
-        return "distributed" if self.resolved_probe_mode() == "join" else "driver"
 
 
 class Crawler:
@@ -182,10 +164,31 @@ class Crawler:
             "cuckoo_capacity_per_shard": self.cfg.cuckoo_capacity_per_shard,
         }
 
+    def probe_path(self) -> str:
+        """'broadcast' while the estimated filter fits under the session's
+        broadcast-join threshold (bytes as SQLConf resolves it; -1 means
+        never broadcast), else 'join'."""
+        limit = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        return "broadcast" if self.cfg.estimated_filter_bytes() <= limit else "join"
+
+    def _empty_filter(self) -> DataFrame:
+        return self.spark.createDataFrame([], FILTER_SCHEMA)
+
+    def _filter_snapshot(self, upto_iter: int) -> DataFrame:
+        """Latest committed (shard, bits) table; empty if none exists."""
+        df = self.state.read_latest("bloom", upto_iter)
+        return df if df is not None else self._empty_filter()
+
+    def _extend_filter(self, hashes_df: DataFrame, bloom_df: DataFrame) -> DataFrame:
+        cfg = self.cfg
+        return extend_filter_join(
+            hashes_df, bloom_df, cfg.n_shards, cfg.seen_filter,
+            cfg.bloom_bits_per_shard, cfg.cuckoo_capacity_per_shard,
+        )
+
     # ------------------------------------------------------------------
     def init_seeds(self, seeds: list[tuple[str, int, int]]) -> None:
         """Iteration 0: canonicalized, deduped seed frontier + seen/bloom."""
-        rows = []
         best: dict[str, tuple] = {}
         for url, priority, seq in seeds:
             cu = canonicalize_one(url)
@@ -201,21 +204,10 @@ class Crawler:
         self.state.write(
             "seen", 0, frontier.select("url_hash", "url", F.lit(0).alias("iter"))
         )
-        if self.cfg.resolved_probe_mode() == "join":
-            # shard-local init write: past the broadcast threshold even
-            # the seed filter (n_shards x dense shard bytes) must not
-            # round-trip the driver
-            empty = self.spark.createDataFrame([], "shard int, bits binary")
-            self.state.write(
-                "bloom", 0,
-                extend_filter_join(
-                    frontier.select("url_hash"), empty, self.cfg.n_shards,
-                    self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
-                    self.cfg.cuckoo_capacity_per_shard,
-                ),
-            )
-        else:
-            self._write_bloom(0, frontier.select("url_hash"), previous=None)
+        self.state.write(
+            "bloom", 0,
+            self._extend_filter(frontier.select("url_hash"), self._empty_filter()),
+        )
         robots = fetch_robots(
             self.spark, [r[2] for r in rows], self.robots_fetcher
         )
@@ -238,79 +230,20 @@ class Crawler:
             (prev + json.dumps(payload, sort_keys=True, separators=(",", ":"))).encode()
         ).hexdigest()
 
-    def _build_filter_shards(
-        self, hashes_df: DataFrame, previous: dict[int, bytes] | None
-    ) -> dict[int, bytes]:
-        """Extend the per-shard seen filters (bloom or cuckoo —
-        cfg.seen_filter) with new hashes, returning the merged shard map.
-
-        Each shard's rebuild runs executor-side in applyInPandas: the
-        task loads the previous shard bytes from a broadcast, inserts the
-        group's hashes, and returns the new bytes — no wave-sized data
-        ever lands on the driver; the driver only collects n_shards
-        (shard, bytes) rows to persist them."""
-        cfg = self.cfg
-        n_shards, n_bits = cfg.n_shards, cfg.bloom_bits_per_shard
-        kind = cfg.seen_filter
-        cap = cfg.cuckoo_capacity_per_shard
-        prev = dict(previous or {})
-        prev_bc = self.spark.sparkContext.broadcast(prev)
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            raw = prev_bc.value.get(shard)
-            if kind == "cuckoo":
-                from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-                f = CuckooShard.sized_for(cap) if raw is None else CuckooShard.from_bytes(raw)
-            else:
-                f = BloomShard(n_bits, 7) if raw is None else BloomShard.from_bytes(raw)
-            f.add_many(pdf["url_hash"].tolist())
-            return pd.DataFrame({"shard": [shard], "bits": [f.to_bytes()]})
-
-        with_shard = hashes_df.withColumn(
-            "shard", (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int")
-        )
-        delta = {
-            r["shard"]: bytes(r["bits"])
-            for r in with_shard.groupBy("shard")
-            .applyInPandas(build, "shard int, bits binary")
-            .collect()
-        }
-        merged = {**prev, **delta}
-        return merged
-
-    def _write_filter(
-        self, iteration: int, hashes_df: DataFrame, previous: dict[int, bytes] | None
-    ) -> dict[int, bytes]:
-        merged = self._build_filter_shards(hashes_df, previous)
-        out = self.spark.createDataFrame(
-            [(s, bytearray(b)) for s, b in sorted(merged.items())],
-            "shard int, bits binary",
-        )
-        self.state.write("bloom", iteration, out)
-        return merged
-
-    # backwards-compatible alias
-    def _write_bloom(self, iteration, hashes_df, previous):
-        return self._write_filter(iteration, hashes_df, previous)
-
-    def _load_bloom(self, upto_iter: int) -> dict[int, bytes]:
-        df = self.state.read_latest("bloom", upto_iter)
-        if df is None:
-            return {}
-        return {r["shard"]: bytes(r["bits"]) for r in df.collect()}
+    def _load_bloom(self, bloom_df: DataFrame) -> dict[int, bytes]:
+        """Collect a (shard, bits) table to the driver — the broadcast
+        probe's input, and the only place filter bytes leave executors."""
+        return {r["shard"]: bytes(r["bits"]) for r in bloom_df.collect()}
 
     # ------------------------------------------------------------------
     def run(self, max_iters: int | None = None) -> dict:
         """Run waves until the frontier drains or max_iters; resumable —
         picks up from the last committed manifest."""
-        cfg = self.cfg
-        max_iters = max_iters or cfg.max_iters
+        max_iters = self.cfg.max_iters if max_iters is None else max_iters
         m = self.state.manifest()
         assert m["completed_iter"] >= 0, "call init_seeds() first"
         it = m["completed_iter"]
-        while it - 0 < max_iters:
+        while it < max_iters:
             it += 1
             m = self.state.manifest()
             frontier = self.state.read_latest("frontier", it - 1)
@@ -322,7 +255,6 @@ class Crawler:
     # ------------------------------------------------------------------
     def _wave(self, it: int, frontier: DataFrame, manifest: dict) -> None:
         cfg, spark = self.cfg, self.spark
-        _timing = os.environ.get("EARCRAWLER_TIMING")
         _t0 = time.perf_counter()
         _stage_secs: dict[str, float] = {}
 
@@ -330,8 +262,6 @@ class Crawler:
             nonlocal _t0
             now = time.perf_counter()
             _stage_secs[phase] = round(now - _t0, 3)
-            if _timing:
-                print(f"[wave {it}] {phase}: {now - _t0:.2f}s", flush=True)
             _t0 = now
         prev_chain = manifest["chain_hash"]
         max_seq = manifest["max_seq"]
@@ -561,23 +491,16 @@ class Crawler:
         )
 
         _mark("link_expand_plan")
-        # bloom pre-filter: only maybe-seen rows pay the anti-join.
-        # probe_mode 'broadcast' ships the whole shard dict to every
-        # executor (right while the filter is MBs); 'join' keeps shards
-        # shard-local via a cogroup — the 10^10-URL path where the filter
-        # is far past broadcast range (bloom.py:12-15 sharding design).
-        blooms = None
-        probe_mode = cfg.resolved_probe_mode()
-        if probe_mode == "join":
-            bloom_df = self.state.read_latest("bloom", it - 1)
-            if bloom_df is None:
-                bloom_df = spark.createDataFrame([], "shard int, bits binary")
+        # bloom pre-filter: only maybe-seen rows pay the anti-join. The
+        # previous snapshot is read once: the broadcast probe collects it,
+        # and filter_write extends it shard-locally on either path.
+        bloom_df = self._filter_snapshot(it - 1)
+        if self.probe_path() == "join":
             candidates = probe_maybe_seen_join(
                 candidates, bloom_df, cfg.n_shards, cfg.seen_filter
             ).cache()
         else:
-            blooms = self._load_bloom(it - 1)
-            bloom_bc = spark.sparkContext.broadcast(blooms)
+            bloom_bc = spark.sparkContext.broadcast(self._load_bloom(bloom_df))
             n_shards = cfg.n_shards
             filter_kind = cfg.seen_filter
 
@@ -587,14 +510,8 @@ class Crawler:
                 return pd.Series(res, index=hashes.index)
 
             candidates = candidates.withColumn("_maybe", maybe_seen("url_hash")).cache()
-        # materialize the cached probe frame once for its two consumers;
-        # the stage key stays constant so manifest stage_secs keys are
-        # stable across waves — the (data-dependent) candidate count is
-        # only computed and reported when timing is on.
-        if _timing:
-            print(f"[wave {it}] probe n_cand={candidates.count()}", flush=True)
-        else:
-            candidates.count()
+        # materialize the cached probe frame once for its two consumers
+        candidates.count()
         _mark("probe_cache")
         definitely_new = candidates.filter(~F.col("_maybe")).drop("_maybe")
         seen = self.state.read_all("seen", it - 1)
@@ -626,17 +543,9 @@ class Crawler:
             n_files=cfg.write_partitions,
         )
         _mark("seen_write")
-        if probe_mode == "join":
-            self.state.write(
-                "bloom", it,
-                extend_filter_join(
-                    new_urls.select("url_hash"), bloom_df, cfg.n_shards,
-                    cfg.seen_filter, cfg.bloom_bits_per_shard,
-                    cfg.cuckoo_capacity_per_shard,
-                ),
-            )
-        else:
-            self._write_filter(it, new_urls.select("url_hash"), previous=blooms)
+        self.state.write(
+            "bloom", it, self._extend_filter(new_urls.select("url_hash"), bloom_df)
+        )
         _mark("filter_write")
         frontier_next = remainder.select(
             "url", "url_hash", "host", "priority", "seq"
@@ -725,77 +634,20 @@ class Crawler:
         # in-place overwrite could delete the only filter snapshot and the
         # very base dir `keep` was being read from).
         bloom_gen = self.state.fresh_gen("bloom", "iter", upto)
-        distributed = self.cfg.resolved_filter_io() == "distributed"
-        if self.cfg.seen_filter == "cuckoo" and n_expired > 0:
-            if distributed:
-                # shard-local deletion: expired hashes cogroup with their
-                # own shard row — the shard map never leaves the executors
-                # (the former broadcast-the-whole-map path was the last
-                # driver route for filter bytes at the 10^10-URL design
-                # point)
-                from earcrawler_spark.crawler.bloom import delete_filter_join
-
-                bloom_df = self.state.read_latest("bloom", upto)
-                if bloom_df is None:
-                    bloom_df = self.spark.createDataFrame(
-                        [], "shard int, bits binary"
-                    )
-                delete_filter_join(
-                    expired.select("url_hash"), bloom_df, self.cfg.n_shards
-                ).write.mode("overwrite").parquet(
-                    self.state._iter_dir("bloom", upto, bloom_gen)
-                )
-            else:
-                blooms = self._load_bloom(upto)
-                bc = self.spark.sparkContext.broadcast(blooms)
-                n_shards = self.cfg.n_shards
-
-                def drop(pdf: pd.DataFrame) -> pd.DataFrame:
-                    from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-                    shard = int(pdf["shard"].iloc[0])
-                    raw = bc.value.get(shard)
-                    if raw is None:
-                        return pd.DataFrame({"shard": [], "bits": []})
-                    f = CuckooShard.from_bytes(raw)
-                    f.delete_many(pdf["url_hash"].tolist())
-                    return pd.DataFrame({"shard": [shard], "bits": [f.to_bytes()]})
-
-                delta = {
-                    r["shard"]: bytes(r["bits"])
-                    for r in expired.withColumn(
-                        "shard",
-                        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
-                    ).groupBy("shard").applyInPandas(drop, "shard int, bits binary").collect()
-                }
-                merged = {**blooms, **delta}
-                self.spark.createDataFrame(
-                    [(sh, bytearray(b)) for sh, b in sorted(merged.items())],
-                    "shard int, bits binary",
-                ).write.mode("overwrite").parquet(
-                    self.state._iter_dir("bloom", upto, bloom_gen)
-                )
-        elif distributed:
-            # blooms can't delete: rebuild shard-locally from the surviving
-            # rows (extend over an empty shard table) into the staged dir
-            empty = self.spark.createDataFrame([], "shard int, bits binary")
-            extend_filter_join(
-                keep.select("url_hash"), empty, self.cfg.n_shards,
-                self.cfg.seen_filter, self.cfg.bloom_bits_per_shard,
-                self.cfg.cuckoo_capacity_per_shard,
-            ).write.mode("overwrite").parquet(
-                self.state._iter_dir("bloom", upto, bloom_gen)
+        if self.cfg.seen_filter == "cuckoo":
+            # shard-local deletion: expired hashes cogroup with their own
+            # shard row; shards with nothing expired pass through as-is
+            new_filter = delete_filter_join(
+                expired.select("url_hash"), self._filter_snapshot(upto),
+                self.cfg.n_shards,
             )
         else:
-            # blooms can't delete: rebuild from the surviving rows into the
-            # staged generation dir (same build as _write_filter, staged)
-            rebuilt = self._build_filter_shards(keep.select("url_hash"), previous=None)
-            self.spark.createDataFrame(
-                [(s, bytearray(b)) for s, b in sorted(rebuilt.items())],
-                "shard int, bits binary",
-            ).write.mode("overwrite").parquet(
-                self.state._iter_dir("bloom", upto, bloom_gen)
-            )
+            # blooms can't delete: rebuild from the surviving rows over
+            # empty shards
+            new_filter = self._extend_filter(keep.select("url_hash"), self._empty_filter())
+        new_filter.write.mode("overwrite").parquet(
+            self.state._iter_dir("bloom", upto, bloom_gen)
+        )
         seen_gen = self.state.fresh_gen("seen", "base", upto)
         keep.coalesce(self.cfg.write_partitions).write.mode("overwrite").parquet(
             self.state._base_dir("seen", upto, seen_gen)
@@ -809,8 +661,6 @@ class Crawler:
         self.state._write_manifest(m)
 
         # Stage 3 — only now delete superseded directories.
-        import shutil
-
         for i in range(upto + 1):
             shutil.rmtree(self.state._iter_dir("seen", i), ignore_errors=True)
         for g in range(bloom_gen):

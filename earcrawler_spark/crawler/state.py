@@ -17,11 +17,12 @@ Crash safety: an iteration's directories are written first; the manifest
 (update via write-temp + atomic rename) is the commit point. A run killed
 mid-iteration resumes from the last committed manifest and recomputes the
 partial iteration from identical inputs — determinism makes the redo
-byte-equivalent (proven by tests/test_crawler_resume.py).
+byte-equivalent (proven by
+tests/test_crawler_engine.py::test_resume_reconverges).
 
 On a production deployment every append-only table here is an Iceberg
 table (snapshot = manifest) and `seen` is MERGE'd; the store keeps that
-swap behind ``read_all`` / ``write_delta`` so the engine code is
+swap behind ``read_all`` / ``write`` so the engine code is
 layout-agnostic.
 """
 

@@ -19,6 +19,16 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def broadcast_threshold(spark):
+    """Setter for the session's spark.sql.autoBroadcastJoinThreshold (the
+    value that picks the crawler's probe path); restored after the test."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    yield lambda value: spark.conf.set(key, value)
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL

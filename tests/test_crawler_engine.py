@@ -108,6 +108,13 @@ def test_resume_reconverges(spark, tmp_path, spark_run):
     assert _spark_visits(c2) == _spark_visits(spark_run)
 
 
+def test_run_zero_iters_runs_no_wave(spark, tmp_path):
+    """max_iters=0 is a cap of zero, not "use the configured default"."""
+    c = Crawler(spark, str(tmp_path / "zero"), CrawlConfig(max_iters=MAX_ITERS, n_partitions=8))
+    c.init_seeds(synth.seed_list())
+    assert c.run(max_iters=0)["completed_iter"] == 0
+
+
 def test_robots_denied_never_visited(spark_run):
     visits = _spark_visits(spark_run)
     assert all("/private" not in v["url"] for v in visits)

@@ -148,7 +148,7 @@ def test_crawl_with_cuckoo_filter_matches_bloom(spark, tmp_path):
 def _probe(c, hashes):
     from earcrawler_spark.crawler.bloom import probe_hashes
 
-    blooms = c._load_bloom(c.state.manifest()["completed_iter"])
+    blooms = c._load_bloom(c.state.read_latest("bloom", c.state.manifest()["completed_iter"]))
     return probe_hashes(hashes, blooms, c.cfg.n_shards, c.cfg.seen_filter)
 
 

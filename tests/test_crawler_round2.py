@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from earcrawler_spark.crawler import synth
@@ -126,7 +127,7 @@ def test_expire_seen_staged_commit_leaves_no_window(spark, tmp_path):
     gens2 = c.state.manifest()["gens"]
     assert gens2[f"seen:base:{upto}"] > gens[f"seen:base:{upto}"]
     # filter still loads (no lost snapshot) and matches the seen table
-    blooms = c._load_bloom(upto)
+    blooms = c._load_bloom(c.state.read_latest("bloom", upto))
     assert blooms, "filter snapshot must survive staged rewrites"
 
 
@@ -147,7 +148,8 @@ def test_expire_seen_crash_before_manifest_is_invisible(spark, tmp_path):
     # state must be unchanged: reads resolve via the committed manifest
     assert c.state.manifest() == manifest_before
     assert sorted(r["url_hash"] for r in c.seen_set().collect()) == seen_before
-    assert c._load_bloom(upto), "committed filter snapshot untouched"
+    assert c._load_bloom(c.state.read_latest("bloom", upto)), \
+        "committed filter snapshot untouched"
 
 
 ROBOTS_GROUPED = """
@@ -190,20 +192,23 @@ def test_robots_user_agent_grouping():
     assert dis == [] and delay == 1.5
 
 
-def test_probe_mode_join_matches_broadcast(spark, tmp_path):
-    """The shard-local cogroup probe/extend path must be output-identical
-    to the whole-filter broadcast path: same chain hash, same seen set,
-    same filter semantics (probes agree)."""
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_probe_mode_join_matches_broadcast(spark, tmp_path, broadcast_threshold, kind):
+    """The shard-local cogroup probe must be output-identical to the
+    whole-filter broadcast probe: same chain hash, same seen set, same
+    filter bytes (both paths extend the filter with the same rows)."""
     runs = {}
-    for mode in ("broadcast", "join"):
+    for path, threshold in (("broadcast", "64MB"), ("join", "-1")):
+        broadcast_threshold(threshold)
         c = Crawler(
-            spark, str(tmp_path / mode),
-            CrawlConfig(max_iters=2, n_partitions=4, probe_mode=mode),
+            spark, str(tmp_path / path),
+            CrawlConfig(max_iters=2, n_partitions=4, seen_filter=kind),
         )
+        assert c.probe_path() == path
         c.init_seeds(synth.seed_list())
         c.run()
         m = c.state.manifest()
-        runs[mode] = (
+        runs[path] = (
             m["chain_hash"],
             sorted(r["url_hash"] for r in c.seen_set().collect()),
             {r["shard"]: bytes(r["bits"])
@@ -211,7 +216,6 @@ def test_probe_mode_join_matches_broadcast(spark, tmp_path):
         )
     assert runs["join"][0] == runs["broadcast"][0], "chain hash diverged"
     assert runs["join"][1] == runs["broadcast"][1]
-    # bloom bit-OR is order-independent -> identical shard bytes too
     assert runs["join"][2] == runs["broadcast"][2]
 
 
@@ -223,8 +227,6 @@ def test_filter_config_persisted_and_validated(spark, tmp_path):
     # same config re-attaches fine
     Crawler(spark, state, CrawlConfig(max_iters=1, n_partitions=4, n_shards=16))
     # different shard count / filter family refuses to attach
-    import pytest
-
     with pytest.raises(ValueError, match="filter parameters"):
         Crawler(spark, state, CrawlConfig(max_iters=1, n_partitions=4, n_shards=8))
     with pytest.raises(ValueError, match="filter parameters"):
@@ -341,32 +343,30 @@ def test_fuzz_robots_grouping(spark):
             assert got == (want[0], want[1]), (trial, ua, txt, got, want)
 
 
-def test_probe_mode_auto_resolution_and_no_driver_collect(spark, tmp_path, monkeypatch):
-    """'auto' resolves by estimated filter size; past the broadcast
-    threshold the crawl must run the shard-local join path and never
-    collect filter bytes to the driver (_load_bloom unused)."""
-    small = CrawlConfig()  # 16 shards x 1Mib bloom = 2 MB -> broadcast
-    assert small.resolved_probe_mode() == "broadcast"
-    big = CrawlConfig(n_shards=4096, bloom_bits_per_shard=1 << 20)  # 512 MB
-    assert big.resolved_probe_mode() == "join"
-    assert CrawlConfig(probe_mode="broadcast", n_shards=4096).resolved_probe_mode() == "broadcast"
+def test_probe_mode_auto_resolution_and_no_driver_collect(
+    spark, tmp_path, monkeypatch, broadcast_threshold
+):
+    """The probe path is one comparison — estimated filter bytes vs the
+    session's spark.sql.autoBroadcastJoinThreshold — and the join path
+    never collects filter bytes to the driver (_load_bloom unused)."""
+    small = Crawler(spark, str(tmp_path / "small"), CrawlConfig())  # 16 x 1 Mib bloom = 2 MiB
+    big = Crawler(spark, str(tmp_path / "big"), CrawlConfig(n_shards=4096))  # 512 MiB
+    # get_spark pins the threshold to 64 MiB
+    assert small.probe_path() == "broadcast"
+    assert big.probe_path() == "join"
+    broadcast_threshold("1GB")  # size strings resolve through SQLConf
+    assert big.probe_path() == "broadcast"
+    broadcast_threshold("-1")  # never broadcast
+    assert small.probe_path() == "join"
+    broadcast_threshold("1KB")
 
-    c = Crawler(
-        spark, str(tmp_path / "auto-join"),
-        CrawlConfig(max_iters=2, n_partitions=4,
-                    probe_broadcast_max_bytes=1024),  # force 'join'
-    )
-    assert c.cfg.resolved_probe_mode() == "join"
+    c = Crawler(spark, str(tmp_path / "auto-join"), CrawlConfig(max_iters=2, n_partitions=4))
+    assert c.probe_path() == "join"
 
-    def _boom(upto_iter):
+    def _boom(bloom_df):
         raise AssertionError("_load_bloom collected filter bytes to the driver")
 
     monkeypatch.setattr(c, "_load_bloom", _boom)
-    monkeypatch.setattr(
-        c, "_build_filter_shards",
-        lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("driver-side shard build used in join mode")),
-    )
     c.init_seeds(synth.seed_list())
     c.run()
     assert c.state.manifest()["completed_iter"] >= 1

@@ -1,12 +1,13 @@
-"""filter_io='distributed': the seen-filter lifecycle (build, probe,
-cuckoo deletion, bloom retention rebuild) keeps shard bytes executor-side
-end to end — no full-filter collect or whole-map broadcast (the r6
-VERDICT's last 10^10-scale driver bottleneck).
+"""The seen-filter lifecycle (build, extend, cuckoo deletion, bloom
+retention rebuild) is shard-local on every crawl: shard bytes stay
+executor-side end to end, whichever probe path the session's broadcast
+threshold selects.
 
-Covers: (a) seen-set + visit + lineage-hash equality between the driver
-and distributed modes for both filter families, (b) a behavior guard
-asserting the distributed mode never calls the driver round-trip
-helpers, (c) probe equivalence after retention expiry."""
+Covers: (a) retention expiry for both filter families, with the
+shard-local probe agreeing afterwards, (b) a behaviour guard that
+expire_seen never collects filter bytes to the driver on either probe
+path, and that a join-path crawl never does either.  Broadcast-vs-join
+output equality is test_crawler_round2.test_probe_mode_join_matches_broadcast."""
 
 from __future__ import annotations
 
@@ -17,33 +18,14 @@ from earcrawler_spark.crawler.bloom import probe_maybe_seen_join
 from earcrawler_spark.crawler.runner import Crawler, CrawlConfig
 
 
-def _crawl(spark, path, kind, io_mode, probe):
+def _crawl(spark, path, kind):
     c = Crawler(
         spark, str(path),
-        CrawlConfig(
-            max_iters=2, n_partitions=4, seen_filter=kind,
-            filter_io=io_mode, probe_mode=probe,
-        ),
+        CrawlConfig(max_iters=2, n_partitions=4, seen_filter=kind),
     )
     c.init_seeds(synth.seed_list())
     c.run()
     return c
-
-
-def _fingerprint(c):
-    m = c.state.manifest()
-    return (
-        [(v["iter"], v["url"]) for v in c.visits_ordered().collect()],
-        {r["url_hash"] for r in c.seen_set().collect()},
-        m["chain_hash"],
-    )
-
-
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
-def test_distributed_filter_io_equals_driver(spark, tmp_path, kind):
-    a = _crawl(spark, tmp_path / f"drv_{kind}", kind, "driver", "broadcast")
-    b = _crawl(spark, tmp_path / f"dist_{kind}", kind, "distributed", "join")
-    assert _fingerprint(a) == _fingerprint(b)
 
 
 def _probe_distributed(spark, c, hashes):
@@ -58,11 +40,11 @@ def _probe_distributed(spark, c, hashes):
 
 
 @pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_expire_seen_distributed(spark, tmp_path, kind):
-    """Sliding-window expiry in distributed mode: same kept/expired
-    accounting, recent hashes still maybe-seen, expired mostly gone —
-    with the whole lifecycle shard-local."""
-    c = _crawl(spark, tmp_path / f"exp_{kind}", kind, "distributed", "join")
+def test_expire_seen_distributed(spark, tmp_path, broadcast_threshold, kind):
+    """Sliding-window expiry after a join-path crawl: same kept/expired
+    accounting, recent hashes still maybe-seen, expired mostly gone."""
+    broadcast_threshold("-1")
+    c = _crawl(spark, tmp_path / f"exp_{kind}", kind)
     seen = c.seen_set().collect()
     old = [r["url_hash"] for r in seen if r["iter"] < 2]
     recent = [r["url_hash"] for r in seen if r["iter"] >= 2]
@@ -79,30 +61,45 @@ def test_expire_seen_distributed(spark, tmp_path, kind):
     assert n_ghost / len(old) < 0.1
 
 
-def test_distributed_mode_never_roundtrips_the_driver(spark, tmp_path, monkeypatch):
-    """Behavior guard: with filter_io='distributed' the crawl + retention
-    lifecycle never calls _load_bloom / _build_filter_shards (the two
-    driver round-trip helpers) and never broadcasts a shard map."""
+def _forbid_filter_collect(mp, c):
+    """Fail on any driver collect of a (shard, bits) filter table."""
 
-    def _boom(name):
-        def inner(*a, **k):
-            raise AssertionError(f"{name} called in distributed filter_io")
+    def _boom(bloom_df):
+        raise AssertionError("_load_bloom collected filter bytes to the driver")
 
-        return inner
+    mp.setattr(c, "_load_bloom", _boom)
+    frame_cls = type(c.spark.range(1))
+    for name in ("collect", "toPandas", "toLocalIterator"):
+        real = getattr(frame_cls, name)
 
-    monkeypatch.setattr(Crawler, "_load_bloom", _boom("_load_bloom"))
-    monkeypatch.setattr(
-        Crawler, "_build_filter_shards", _boom("_build_filter_shards")
-    )
-    c = _crawl(spark, tmp_path / "guard", "cuckoo", "distributed", "join")
-    stats = c.expire_seen(older_than_iter=2)
-    assert stats["kept"] > 0 and stats["expired"] > 0
+        def guarded(self, *a, _real=real, _name=name, **k):
+            if "bits" in self.columns:
+                raise AssertionError(f"filter bytes reached the driver via {_name}")
+            return _real(self, *a, **k)
+
+        mp.setattr(frame_cls, name, guarded)
 
 
-def test_auto_filter_io_follows_probe_mode():
-    small = CrawlConfig(seen_filter="bloom")
-    assert small.resolved_probe_mode() == "broadcast"
-    assert small.resolved_filter_io() == "driver"
-    big = CrawlConfig(seen_filter="bloom", probe_broadcast_max_bytes=1)
-    assert big.resolved_probe_mode() == "join"
-    assert big.resolved_filter_io() == "distributed"
+def test_distributed_mode_never_roundtrips_the_driver(
+    spark, tmp_path, monkeypatch, broadcast_threshold
+):
+    """Behaviour guard: on both probe paths and for both filter families,
+    expire_seen never collects filter bytes to the driver; a join-path
+    crawl never does either."""
+    for path, threshold in (("broadcast", "64MB"), ("join", "-1")):
+        broadcast_threshold(threshold)
+        for kind in ("cuckoo", "bloom"):
+            c = Crawler(
+                spark, str(tmp_path / f"{path}_{kind}"),
+                CrawlConfig(max_iters=2, n_partitions=4, seen_filter=kind),
+            )
+            assert c.probe_path() == path
+            with monkeypatch.context() as mp:
+                if path == "join":
+                    _forbid_filter_collect(mp, c)
+                c.init_seeds(synth.seed_list())
+                c.run()
+            with monkeypatch.context() as mp:
+                _forbid_filter_collect(mp, c)
+                stats = c.expire_seen(older_than_iter=2)
+            assert stats["kept"] > 0 and stats["expired"] > 0
