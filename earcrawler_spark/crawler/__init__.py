@@ -12,5 +12,5 @@ frontier ──politeness dequeue──▶ fetch (mapInPandas) ──▶ span ex
 Determinism contract: the visit order and the URL-seen set are pure
 functions of (seed list, politeness budget, link graph) — invariant to
 partition count and executor parallelism. Verified against a sequential
-reference model in tests/test_crawler_reference_model.py.
+reference model (tests/reference_model.py) in tests/test_crawler_engine.py.
 """

@@ -1,5 +1,6 @@
-"""Sharded Bloom filter for the URL-seen set — numpy bit arrays, built
-per partition, OR-merged across checkpoints.
+"""Sharded seen-set filters — numpy bloom bit arrays (or cuckoo tables,
+crawler/cuckoo.py), one (shard, bits) row per shard, built, extended and
+deleted shard-locally by one cogroup kernel.
 
 Role (north rule): probabilistic pre-filter in front of the exact
 anti-join (reference's exact dict-membership skip,
@@ -14,6 +15,10 @@ runs and partition layouts. Each shard's filter is small enough to
 broadcast; at 10^10 URLs you'd size m/n≈10 bits → ~12 GB total split over
 e.g. 4096 shards of ~3 MB, each probed only by its shard's rows.
 
+Filter family: ``shard_family`` is the one place that maps a kind
+('bloom' / 'cuckoo') to its shard class and empty shard; every probe,
+extend and size estimate goes through it.
+
 Hash functions: k indexes derived from two independent 64-bit halves of
 the url's sha256 (Kirsch-Mitzenmacher double hashing) — deterministic,
 no extra hashing work since the sha256 hex is already the seen-set key.
@@ -23,7 +28,10 @@ from __future__ import annotations
 
 import numpy as np
 
+from earcrawler_spark.crawler.cuckoo import CuckooShard
+
 HEX64 = 16  # hex chars per 64-bit half
+N_HASHES = 7
 
 
 def _h1_h2(hash_hex: "np.ndarray | list[str]") -> tuple[np.ndarray, np.ndarray]:
@@ -35,16 +43,11 @@ def _h1_h2(hash_hex: "np.ndarray | list[str]") -> tuple[np.ndarray, np.ndarray]:
 class BloomShard:
     """Fixed-size bit-array bloom filter over sha256-hex keys."""
 
-    def __init__(self, n_bits: int, n_hashes: int, bits: np.ndarray | None = None):
+    def __init__(self, n_bits: int, n_hashes: int = N_HASHES, bits: np.ndarray | None = None):
         assert n_bits % 8 == 0
         self.n_bits = np.uint64(n_bits)
         self.n_hashes = n_hashes
         self.bits = bits if bits is not None else np.zeros(n_bits // 8, dtype=np.uint8)
-
-    @classmethod
-    def sized_for(cls, expected_items: int, bits_per_item: int = 10) -> "BloomShard":
-        n_bits = max(1024, 1 << int(np.ceil(np.log2(expected_items * bits_per_item + 1))))
-        return cls(n_bits=n_bits, n_hashes=7)
 
     def _positions(self, hash_hex) -> np.ndarray:
         h1, h2 = _h1_h2(hash_hex)
@@ -54,6 +57,10 @@ class BloomShard:
         return idx
 
     def add_many(self, hash_hex) -> None:
+        # ufunc.at ignores the read-only flag (numpy 1.x) and would write
+        # into the immutable bytes behind a from_bytes(copy=False) view
+        if not self.bits.flags.writeable:
+            raise ValueError("read-only BloomShard view; use from_bytes(raw) to extend")
         if len(hash_hex) == 0:
             return
         pos = self._positions(hash_hex).ravel()
@@ -77,54 +84,49 @@ class BloomShard:
         return self.bits.tobytes()
 
     @classmethod
-    def from_bytes(cls, raw: bytes, n_hashes: int = 7) -> "BloomShard":
-        bits = np.frombuffer(raw, dtype=np.uint8).copy()
-        return cls(n_bits=len(bits) * 8, n_hashes=n_hashes)._with_bits(bits)
+    def from_bytes(cls, raw: bytes, n_hashes: int = N_HASHES, copy: bool = True) -> "BloomShard":
+        """copy=False → a read-only view of ``raw`` (probes only: no
+        memcpy per batch, and an add_many raises instead of writing into
+        broadcast bytes)."""
+        bits = np.frombuffer(raw, dtype=np.uint8)
+        if copy:
+            bits = bits.copy()
+        else:
+            bits.flags.writeable = False
+        return cls(len(bits) * 8, n_hashes, bits)
 
-    def _with_bits(self, bits: np.ndarray) -> "BloomShard":
-        self.bits = bits
-        return self
+
+def shard_family(kind: str, n_bits: int = 1 << 20, cuckoo_capacity: int = 1 << 17):
+    """The filter-family switch → (shard class, factory for an empty
+    shard of ``n_bits`` bloom bits / ``cuckoo_capacity`` cuckoo keys)."""
+    if kind == "bloom":
+        return BloomShard, lambda: BloomShard(n_bits)
+    if kind == "cuckoo":
+        return CuckooShard, lambda: CuckooShard.sized_for(cuckoo_capacity)
+    raise ValueError(f"unknown seen-filter kind {kind!r} (expected 'bloom' or 'cuckoo')")
 
 
 def shard_of(hash_hex: str, n_shards: int) -> int:
     return int(hash_hex[:8], 16) % n_shards
 
 
-def shard_of_series(hash_hex_series, n_shards: int) -> np.ndarray:
-    return np.array([int(h[:8], 16) % n_shards for h in hash_hex_series], dtype=np.int32)
+def _per_shard(keys_df, bloom_df, n_shards: int, body, schema):
+    """The one per-shard kernel: ``keys_df`` (with a url_hash column) gains
+    an ``_shard`` column, each shard's rows cogroup with that shard's
+    (shard, bits) row of ``bloom_df`` (renamed to ``_shard``), and
+    ``body(left, right)`` runs per shard in applyInPandas. Shards present
+    on one side only still reach ``body`` with the other side empty."""
+    from pyspark.sql import functions as F
 
-
-# --- executor-side probe path --------------------------------------------
-# Re-materializing a BloomShard from broadcast bytes on every Arrow batch
-# costs a full bit-array memcpy per (batch, shard) — at 32 workers that
-# memory traffic dominates the probe. Shards are immutable on the probe
-# path, so each Python worker caches zero-copy (read-only frombuffer)
-# views keyed by (broadcast id, shard).
-# id(raw) is only a safe cache key while the keyed bytes object is alive —
-# CPython reuses ids after garbage collection, and a recycled id returning a
-# stale filter could produce FALSE NEGATIVES. The cache therefore stores a
-# strong reference to the exact bytes object alongside the parsed shard:
-# while an entry exists, its key's id cannot be recycled, and an identity
-# check guards the lookup.
-_SHARD_CACHE: dict[int, tuple[bytes, object]] = {}
-
-
-def _cached_shard(raw: bytes, kind: str = "bloom", n_hashes: int = 7):
-    key = id(raw)
-    hit = _SHARD_CACHE.get(key)
-    if hit is not None and hit[0] is raw:
-        return hit[1]
-    if len(_SHARD_CACHE) > 512:
-        _SHARD_CACHE.clear()
-    if kind == "cuckoo":
-        from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-        b = CuckooShard.from_bytes(raw)
-    else:
-        bits = np.frombuffer(raw, dtype=np.uint8)  # zero-copy, read-only
-        b = BloomShard(len(bits) * 8, n_hashes, bits)
-    _SHARD_CACHE[key] = (raw, b)
-    return b
+    keyed = keys_df.withColumn(
+        "_shard",
+        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
+    )
+    return (
+        keyed.groupBy("_shard")
+        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
+        .applyInPandas(body, schema)
+    )
 
 
 def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloom"):
@@ -138,15 +140,12 @@ def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloo
     while the filter fits under spark.sql.autoBroadcastJoinThreshold.
     → candidates + `_maybe` boolean."""
     import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    cand = candidates.withColumn(
-        "_shard",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards).cast("int"),
-    )
+    cls, _ = shard_family(kind)
     out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("_maybe", T.BooleanType())]
+        list(candidates.schema.fields)
+        + [T.StructField("_shard", T.IntegerType()), T.StructField("_maybe", T.BooleanType())]
     )
 
     def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -154,15 +153,10 @@ def probe_maybe_seen_join(candidates, bloom_df, n_shards: int, kind: str = "bloo
             return left.assign(_maybe=pd.Series([], dtype=bool))
         if len(right) == 0:
             return left.assign(_maybe=False)
-        shard = _cached_shard(bytes(right["bits"].iloc[0]), kind)
+        shard = cls.from_bytes(right["bits"].iloc[0], copy=False)
         return left.assign(_maybe=shard.contains_many(left["url_hash"].tolist()))
 
-    probed = (
-        cand.groupBy("_shard")
-        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(probe, out_schema)
-    )
-    return probed.drop("_shard")
+    return _per_shard(candidates, bloom_df, n_shards, probe, out_schema).drop("_shard")
 
 
 def extend_filter_join(
@@ -177,37 +171,18 @@ def extend_filter_join(
     shards: new hashes cogroup with their shard's bits; untouched shards
     (right-only groups) pass through unchanged. → new (shard, bits)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    hashed = hashes_df.select(
-        "url_hash",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards)
-        .cast("int")
-        .alias("_shard"),
-    )
+    cls, empty = shard_family(kind, n_bits, cuckoo_capacity)
 
     def extend(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0:
             return right.rename(columns={"_shard": "shard"})[["shard", "bits"]]
-        shard_id = int(left["_shard"].iloc[0])
-        raw = bytes(right["bits"].iloc[0]) if len(right) else None
-        if kind == "cuckoo":
-            from earcrawler_spark.crawler.cuckoo import CuckooShard
-
-            f = (
-                CuckooShard.sized_for(cuckoo_capacity)
-                if raw is None
-                else CuckooShard.from_bytes(raw)
-            )
-        else:
-            f = BloomShard(n_bits, 7) if raw is None else BloomShard.from_bytes(raw)
+        f = cls.from_bytes(right["bits"].iloc[0]) if len(right) else empty()
         f.add_many(left["url_hash"].tolist())
-        return pd.DataFrame({"shard": [shard_id], "bits": [f.to_bytes()]})
+        return pd.DataFrame({"shard": [int(left["_shard"].iloc[0])], "bits": [f.to_bytes()]})
 
-    return (
-        hashed.groupBy("_shard")
-        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(extend, "shard int, bits binary")
+    return _per_shard(
+        hashes_df.select("url_hash"), bloom_df, n_shards, extend, "shard int, bits binary"
     )
 
 
@@ -220,14 +195,14 @@ def probe_hashes(
     out = np.zeros(len(hashes), dtype=bool)
     if not hashes:
         return out
-    shards = shard_of_series(hashes, n_shards)
+    cls, _ = shard_family(kind)
+    shards = np.array([shard_of(h, n_shards) for h in hashes])
     for s in np.unique(shards):
         raw = table.get(int(s))
         if raw is None:
             continue
         idx = np.nonzero(shards == s)[0]
-        b = _cached_shard(raw, kind)
-        out[idx] = b.contains_many([hashes[i] for i in idx])
+        out[idx] = cls.from_bytes(raw, copy=False).contains_many([hashes[i] for i in idx])
     return out
 
 
@@ -241,31 +216,17 @@ def delete_filter_join(expired_df, bloom_df, n_shards: int):
     10^10-URL design point the shard map is the largest state object in
     the system, so it never passes through the driver."""
     import pandas as pd
-    from pyspark.sql import functions as F
-
-    hashed = expired_df.select(
-        "url_hash",
-        (F.conv(F.substring("url_hash", 1, 8), 16, 10).cast("long") % n_shards)
-        .cast("int")
-        .alias("_shard"),
-    )
 
     def drop(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        from earcrawler_spark.crawler.cuckoo import CuckooShard
-
         if len(right) == 0:
             # expired hashes for a shard with no bits: nothing to delete
             return pd.DataFrame({"shard": [], "bits": []})
-        shard_id = int(right["_shard"].iloc[0])
-        raw = bytes(right["bits"].iloc[0])
         if len(left) == 0:
-            return pd.DataFrame({"shard": [shard_id], "bits": [raw]})
-        f = CuckooShard.from_bytes(raw)
+            return right.rename(columns={"_shard": "shard"})[["shard", "bits"]]
+        f = CuckooShard.from_bytes(right["bits"].iloc[0])
         f.delete_many(left["url_hash"].tolist())
-        return pd.DataFrame({"shard": [shard_id], "bits": [f.to_bytes()]})
+        return pd.DataFrame({"shard": [int(right["_shard"].iloc[0])], "bits": [f.to_bytes()]})
 
-    return (
-        hashed.groupBy("_shard")
-        .cogroup(bloom_df.withColumnRenamed("shard", "_shard").groupBy("_shard"))
-        .applyInPandas(drop, "shard int, bits binary")
+    return _per_shard(
+        expired_df.select("url_hash"), bloom_df, n_shards, drop, "shard int, bits binary"
     )

@@ -79,7 +79,10 @@ def _canon_query(qs) -> str:
 def canonicalize_batch(urls: pd.Series) -> pd.Series:
     """Vectorized canonicalization of a string Series; row-for-row equal
     to ``urls.map(canonicalize_one)`` (per-row Python only for the slow
-    tail and the per-UNIQUE-query-string parameter sort)."""
+    tail and the per-UNIQUE-query-string parameter sort). Any index,
+    duplicate labels included, is preserved."""
+    index = urls.index
+    urls = urls.reset_index(drop=True)  # the tiers below align by label
     s = urls.str.strip()
     ascii_ok = ~s.str.contains(r"[^\x20-\x7e]", regex=True, na=True)
     out = pd.Series(index=urls.index, dtype=object)
@@ -114,7 +117,7 @@ def canonicalize_batch(urls: pd.Series) -> pd.Series:
         slow_idx = fast.index[~fast.to_numpy()]
         if len(slow_idx):
             out.loc[slow_idx] = urls.loc[slow_idx].map(canonicalize_one)
-    return out
+    return out.set_axis(index)
 
 
 @F.pandas_udf(StringType())

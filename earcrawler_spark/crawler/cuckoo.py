@@ -12,11 +12,14 @@ deterministic victim choice (slot = kick counter mod 4), so shard bytes
 are a pure function of the insertion sequence — required for the
 engine's reproducible checkpoints.
 
-Same executor contract as BloomShard: build/extend/delete per shard in
-a cogroup (bloom.extend_filter_join / delete_filter_join), probe via
-broadcast bytes or the shard-local join; exactness is always backstopped
-by the seen-table anti-join (false positives cost a join row, false
-negatives cannot happen for present keys).
+Same executor contract as BloomShard: bloom.shard_family is the one
+switch that picks this class for seen_filter='cuckoo' (and sizes its
+empty shard with ``sized_for``); extend and delete run per shard in
+bloom's one cogroup kernel (extend_filter_join / delete_filter_join),
+and both probes (broadcast bytes or the shard-local join) read a
+zero-copy ``from_bytes(raw, copy=False)`` view. Exactness is always
+backstopped by the seen-table anti-join (false positives cost a join
+row, false negatives cannot happen for present keys).
 """
 
 from __future__ import annotations
@@ -111,6 +114,11 @@ class CuckooShard:
         return self.table.tobytes()
 
     @classmethod
-    def from_bytes(cls, raw: bytes) -> "CuckooShard":
-        arr = np.frombuffer(raw, dtype=np.uint16).copy().reshape(-1, SLOTS)
+    def from_bytes(cls, raw: bytes, copy: bool = True) -> "CuckooShard":
+        """copy=False → a read-only view of ``raw`` (probes only)."""
+        arr = np.frombuffer(raw, dtype=np.uint16).reshape(-1, SLOTS)
+        if copy:
+            arr = arr.copy()
+        else:
+            arr.flags.writeable = False
         return cls(n_buckets=arr.shape[0], table=arr)

@@ -53,6 +53,7 @@ from earcrawler_spark.crawler.bloom import (
     extend_filter_join,
     probe_hashes,
     probe_maybe_seen_join,
+    shard_family,
 )
 from earcrawler_spark.crawler.cache import evict_cache, merge_cache, split_by_cache
 from earcrawler_spark.crawler.canonicalize import (
@@ -108,21 +109,21 @@ class CrawlConfig:
     write_partitions: int = 8
 
     # The seen filter has one lifecycle: build, extend and (cuckoo)
-    # delete all run shard-locally — bloom.extend_filter_join /
-    # delete_filter_join cogroup each shard's rows with that shard's
-    # (shard, bits) row, so filter bytes never round-trip the driver.
-    # Only the probe has two paths (Crawler.probe_path): while this
-    # estimate fits under the session's spark.sql.autoBroadcastJoinThreshold
+    # delete all run shard-locally in bloom.py's one per-shard cogroup
+    # kernel, so filter bytes never round-trip the driver, and
+    # bloom.shard_family is the one switch from seen_filter to a shard
+    # class. Only the probe has two paths (Crawler.probe_path): while
+    # this size fits under the session's spark.sql.autoBroadcastJoinThreshold
     # every executor gets the whole filter by broadcast (fastest at MBs);
     # past it, candidates cogroup with their own shard — the 10^10-URL
     # path. Both give identical outputs (chain-hash-asserted).
     def estimated_filter_bytes(self) -> int:
-        if self.seen_filter == "cuckoo":
-            # n_buckets ~= cap/(4*0.8), 4 uint16 slots per bucket
-            per_shard = int(self.cuckoo_capacity_per_shard * 2 / 0.8)
-        else:
-            per_shard = self.bloom_bits_per_shard // 8
-        return self.n_shards * per_shard
+        """Committed filter size: n_shards x one empty shard's bytes
+        (shards are fixed-size, so this is exact)."""
+        _, empty = shard_family(
+            self.seen_filter, self.bloom_bits_per_shard, self.cuckoo_capacity_per_shard
+        )
+        return self.n_shards * len(empty().to_bytes())
 
 
 class Crawler:

@@ -115,11 +115,17 @@ def test_batch_equals_reference_edge_cases():
 
     from earcrawler_spark.crawler.canonicalize import canonicalize_batch
 
-    got = canonicalize_batch(pd.Series(_BATCH_EDGE_CASES)).tolist()
     want = [canonicalize_one(u) for u in _BATCH_EDGE_CASES]
-    assert got == want, [
-        (u, g, w) for u, g, w in zip(_BATCH_EDGE_CASES, got, want) if g != w
-    ]
+    n = len(_BATCH_EDGE_CASES)
+    # default RangeIndex, then the same rows under duplicate labels
+    # (neighbouring rows share a label across fast/slow tier boundaries)
+    for index in (pd.RangeIndex(n), pd.Index([i // 2 for i in range(n)])):
+        res = canonicalize_batch(pd.Series(_BATCH_EDGE_CASES, index=index))
+        assert res.index.equals(index)
+        got = res.tolist()
+        assert got == want, [
+            (u, g, w) for u, g, w in zip(_BATCH_EDGE_CASES, got, want) if g != w
+        ]
 
 
 @settings(max_examples=200, deadline=None)

@@ -6,15 +6,26 @@ threshold selects.
 Covers: (a) retention expiry for both filter families, with the
 shard-local probe agreeing afterwards, (b) a behaviour guard that
 expire_seen never collects filter bytes to the driver on either probe
-path, and that a join-path crawl never does either.  Broadcast-vs-join
-output equality is test_crawler_round2.test_probe_mode_join_matches_broadcast."""
+path, and that a join-path crawl never does either, (c) the size
+estimate that picks the probe path against the committed shard bytes,
+and (d) the one per-shard kernel (extend / delete / probe views) on a
+hand-built shard table.  Broadcast-vs-join output equality is
+test_crawler_round2.test_probe_mode_join_matches_broadcast."""
 
 from __future__ import annotations
+
+import hashlib
 
 import pytest
 
 from earcrawler_spark.crawler import synth
-from earcrawler_spark.crawler.bloom import probe_maybe_seen_join
+from earcrawler_spark.crawler.bloom import (
+    delete_filter_join,
+    extend_filter_join,
+    probe_maybe_seen_join,
+    shard_family,
+    shard_of,
+)
 from earcrawler_spark.crawler.runner import Crawler, CrawlConfig
 
 
@@ -103,3 +114,55 @@ def test_distributed_mode_never_roundtrips_the_driver(
                 _forbid_filter_collect(mp, c)
                 stats = c.expire_seen(older_than_iter=2)
             assert stats["kept"] > 0 and stats["expired"] > 0
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_estimated_filter_bytes_is_committed_size(spark, tmp_path, kind):
+    """probe_path compares this estimate with the broadcast threshold, so
+    it must be the size init_seeds actually commits."""
+    c = Crawler(spark, str(tmp_path / kind), CrawlConfig(n_partitions=4, seen_filter=kind))
+    c.init_seeds(synth.seed_list())
+    rows = c.state.read_latest("bloom", 0).collect()
+    assert rows
+    for r in rows:
+        assert c.cfg.n_shards * len(r["bits"]) == c.cfg.estimated_filter_bytes()
+
+
+def _sha(prefix: str, n: int) -> list[str]:
+    return [hashlib.sha256(f"{prefix}-{i}".encode()).hexdigest() for i in range(n)]
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_per_shard_kernel_on_hand_built_table(spark, kind):
+    n_shards, n_bits, capacity = 4, 1 << 12, 256
+    cls, empty = shard_family(kind, n_bits, capacity)
+    keys = _sha("old", 200)
+    table = {}
+    for s in range(n_shards):
+        f = empty()
+        f.add_many([h for h in keys if shard_of(h, n_shards) == s])
+        table[s] = f.to_bytes()
+    bloom_df = spark.createDataFrame(sorted(table.items()), "shard int, bits binary")
+
+    def frame(hashes):
+        return spark.createDataFrame([(h,) for h in hashes], "url_hash string")
+
+    def as_map(df):
+        return {r["shard"]: bytes(r["bits"]) for r in df.collect()}
+
+    # extend with keys of shard 2 only: every other shard is byte-identical
+    new = [h for h in _sha("new", 200) if shard_of(h, n_shards) == 2]
+    ext = as_map(extend_filter_join(frame(new), bloom_df, n_shards, kind, n_bits, capacity))
+    assert set(ext) == set(table)
+    assert all(ext[s] == table[s] for s in table if s != 2)
+    assert ext[2] != table[2] and cls.from_bytes(ext[2]).contains_many(new).all()
+
+    # delete with nothing expired returns the input table byte-for-byte
+    assert as_map(delete_filter_join(frame([]), bloom_df, n_shards)) == table
+
+    # a probe's zero-copy view can never write into broadcast bytes
+    view = cls.from_bytes(table[0], copy=False)
+    assert view.contains_many(keys).sum() > 0
+    with pytest.raises(ValueError):
+        view.add_many(new)
+    cls.from_bytes(table[0]).add_many(new)  # the default copy stays writable
